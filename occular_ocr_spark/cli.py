@@ -28,7 +28,10 @@ Flag mapping from the reference surface:
 With ``--checkpointed`` the write goes through
 :class:`~occular_ocr_spark.sink.CheckpointedParquetSink` — resumable,
 idempotent, lineage-carrying (the north rule's sink); re-running the
-same command after a kill completes only the uncommitted ranges.
+same command after a kill completes only the uncommitted ranges, a
+re-run with another ``--snapshot-id``, ``--force-ocr`` or ``--strategy``
+recomputes every range, and another ``--num-buckets`` on the same
+output fails before writing.
 """
 
 from __future__ import annotations

@@ -26,16 +26,20 @@ composes; constants are imported from those modules, never copied):
 8  shard           round-robin bins across shards + manifest   shard_interleave
 == ==============  ==========================================  =================
 
-Checkpoint/resume contract: stage 1 goes through
-:class:`sink.CheckpointedParquetSink` (bucket-range manifest — a kill
-mid-extract resumes at range granularity); stages 2..8 each write
-parquet + commit a JSON manifest by atomic rename (the same tmp+rename
-barrier the sink uses), recording row count, an order-insensitive
-additive digest, the stage's upstream digest, and lineage
-(src_snapshot_id, extractor_version, PIPELINE_VERSION).  ``run_pipeline``
-on a directory with committed stages re-reads them instead of
-recomputing — a resumed run is therefore bit-identical by construction
-(verified by tests/test_pipeline_e2e.py's kill-and-resume).
+Checkpoint/resume contract: every stage commits one lineage record
+(``_MANIFEST.json`` next to its parquet) through the sink's
+:func:`sink.commit_record` — the same atomic tmp+rename barrier, the
+same record format the sink keeps per bucket range (stage 1 also
+resumes at the sink's range granularity).  A record holds row count, an
+order-insensitive additive digest, and the key it was built under:
+src_snapshot_id, extractor identity (version + force_ocr),
+PIPELINE_VERSION and the upstream stage's ``digest_sum``.
+``run_pipeline`` walks the chain and reuses a stage only when
+:func:`sink.load_record` finds that key equal to this run's, the
+upstream digest read from the previous stage's record as the chain
+runs; a mismatch removes the stale record and recomputes the stage.  A
+resumed run is therefore bit-identical by construction (verified by
+tests/test_pipeline_e2e.py's kill-and-resume).
 
 Scale: every stage is the catalog twin's plan — partial-agg shuffles,
 broadcast only for O(K) sides (the eval shingle set, LSH seeds),
@@ -58,7 +62,6 @@ axis-B net-new (SURVEY.md §2 "LLM-data pipeline ops").
 from __future__ import annotations
 
 import atexit
-import json
 import os
 import shutil
 import tempfile
@@ -67,7 +70,6 @@ from typing import Dict, List, Optional
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from . import queries as _q
-from .extraction import core
 from .queries import _minhash_candidates, _t
 from .queries_pipeline import _DECON_BENCH_DOCS, _DECON_MIN_OVERLAP, _PACK_BLOCK, _PACK_CAP
 from .queries_quality import (
@@ -81,7 +83,14 @@ from .queries_quality import (
     _GR_STOPWORDS,
 )
 from .queries_scale import _SPLIT_TRAIN_BUCKETS
-from .sink import CheckpointedParquetSink
+from .sink import (
+    LINEAGE_FIELDS,
+    CheckpointedParquetSink,
+    commit_record,
+    drop_record,
+    lineage,
+    load_record,
+)
 
 PIPELINE_VERSION = "e2e/1"
 N_SHARDS = 8
@@ -116,11 +125,7 @@ def _manifest_path(out_dir: str, stage: str) -> str:
 
 
 def stage_manifest(out_dir: str, stage: str) -> Optional[dict]:
-    p = _manifest_path(out_dir, stage)
-    if os.path.exists(p):
-        with open(p) as f:
-            return json.load(f)
-    return None
+    return load_record(_manifest_path(out_dir, stage))
 
 
 def _digest_col(cols: List[str]):
@@ -137,17 +142,14 @@ def _commit_stage(
     df: DataFrame,
     digest_cols: List[str],
     upstream_digest: Optional[int],
-    src_snapshot_id: int,
-) -> DataFrame:
-    """Write a stage's parquet, then commit its manifest by atomic
-    rename — the same barrier the sink uses: data is never trusted
-    without its manifest, so a kill between write and commit simply
-    re-runs the stage."""
-    sdir = _stage_dir(out_dir, stage)
-    data = os.path.join(sdir, "data")
+    lineage: dict,
+) -> dict:
+    """Write a stage's parquet, then commit its record — data is never
+    trusted without its record, so a kill between write and commit
+    simply re-runs the stage."""
+    data = os.path.join(_stage_dir(out_dir, stage), "data")
     df.write.mode("overwrite").parquet(data)
-    back = spark.read.parquet(data)
-    agg = back.agg(
+    agg = spark.read.parquet(data).agg(
         F.count(F.lit(1)).alias("n"),
         F.coalesce(F.sum(_digest_col(digest_cols)), F.lit(0)).alias("dig"),
     ).collect()[0]
@@ -157,25 +159,19 @@ def _commit_stage(
         "digest_sum": int(agg["dig"]),
         "digest_cols": digest_cols,
         "upstream_digest": upstream_digest,
-        "src_snapshot_id": src_snapshot_id,
-        "extractor_version": core.EXTRACTOR_VERSION,
-        "pipeline_version": PIPELINE_VERSION,
+        **lineage,
     }
-    fd, tmp = tempfile.mkstemp(dir=sdir, suffix=".tmp")
-    with os.fdopen(fd, "w") as f:
-        json.dump(entry, f)
-    os.replace(tmp, _manifest_path(out_dir, stage))
-    return back
+    commit_record(_manifest_path(out_dir, stage), entry)
+    return entry
 
 
 def _release_checkpoint(df: DataFrame) -> None:
     """Release a localCheckpoint'ed DataFrame's storage blocks.  The
     checkpoint blocks belong to the LogicalRDD's RDD, which
-    ``Dataset.unpersist`` (cache-manager only) never touches."""
-    try:
-        df._jdf.queryExecution().analyzed().rdd().unpersist(False)
-    except Exception:  # noqa: BLE001 — best-effort storage reclaim
-        pass
+    ``Dataset.unpersist`` (cache-manager only) never touches.  Unguarded
+    on purpose: if a Spark upgrade moves this internal path, the CC loop
+    fails loudly instead of silently keeping one label table per round."""
+    df._jdf.queryExecution().analyzed().rdd().unpersist(False)
 
 
 def _read_stage(spark: SparkSession, out_dir: str, stage: str) -> DataFrame:
@@ -366,30 +362,20 @@ def run_pipeline(
 ) -> Dict[str, dict]:
     """Run (or resume) the composed pipeline.  ``stop_after`` ends the
     run after that stage commits (the kill-injection hook for the
-    resume test).  Returns {stage: manifest} for all committed stages.
+    resume test).  Returns {stage: record} for the committed chain.
     """
-    os.makedirs(out_dir, exist_ok=True)
-    # a stage manifest is only trusted when its recorded chain matches
-    # this run (ADVICE r5) — inconsistent suffixes recompute below
-    _invalidate_inconsistent(out_dir, src_snapshot_id)
     docs = _t(spark, sf_dir, "documents")
-
-    def done(stage: str) -> bool:
-        return stage_manifest(out_dir, stage) is not None
-
-    def upstream_digest(stage: str) -> Optional[int]:
-        m = stage_manifest(out_dir, stage)
-        return None if m is None else m["digest_sum"]
+    key = {**lineage(src_snapshot_id), "pipeline_version": PIPELINE_VERSION}
 
     # -- stage 1: extract, THROUGH the checkpointed sink (range resume);
     # the sink's bucketed layout lives under the stage dir, the stage's
     # doc-keyed projection is then sealed next to it --
-    sink = CheckpointedParquetSink(
-        os.path.join(_stage_dir(out_dir, "extract"), "sink"),
-        num_buckets=16,
-        num_ranges=4,
-    )
-    if not done("extract"):
+    def extract(docs: DataFrame):
+        sink = CheckpointedParquetSink(
+            os.path.join(_stage_dir(out_dir, "extract"), "sink"),
+            num_buckets=16,
+            num_ranges=4,
+        )
         sink.write(_synth_transcripts(docs), src_snapshot_id=src_snapshot_id)
         ext = sink.read(spark).select(
             (
@@ -399,18 +385,10 @@ def run_pipeline(
             F.col("text").alias("extracted"),
             "method",
         )
-        # the sink's own range manifests already checkpoint the write;
-        # the stage manifest seals the chain-level digest on top
-        _commit_stage(
-            spark, out_dir, "extract",
-            ext, ["doc_id", "extracted", "method"], None, src_snapshot_id,
-        )
-    if stop_after == "extract":
-        return manifests(out_dir)
+        return ext, ["doc_id", "extracted", "method"]
 
     # -- stage 2: quality gate on extracted text + metadata re-attach --
-    if not done("quality"):
-        ext = _read_stage(spark, out_dir, "extract")
+    def quality(ext: DataFrame):
         meta = docs.select("doc_id", "lang", "source")
         gated = (
             ext.where(F.col("extracted") != "")
@@ -421,43 +399,23 @@ def run_pipeline(
             .join(meta, "doc_id")
             .select("doc_id", "text", "lang", "source")
         )
-        _commit_stage(
-            spark, out_dir, "quality",
-            gated, ["doc_id", "text"], upstream_digest("extract"), src_snapshot_id,
-        )
-    if stop_after == "quality":
-        return manifests(out_dir)
+        return gated, ["doc_id", "text"]
 
     # -- stage 3: exact dedup (md5 groupBy, keep min doc_id) --
-    if not done("dedup_exact"):
-        d = _read_stage(spark, out_dir, "quality")
+    def dedup_exact(d: DataFrame):
         keep = (
             d.groupBy(F.md5("text").alias("h"))
             .agg(F.min("doc_id").alias("doc_id"))
             .select("doc_id")
         )
-        _commit_stage(
-            spark, out_dir, "dedup_exact",
-            d.join(keep, "doc_id"), ["doc_id", "text"],
-            upstream_digest("quality"), src_snapshot_id,
-        )
-    if stop_after == "dedup_exact":
-        return manifests(out_dir)
+        return d.join(keep, "doc_id"), ["doc_id", "text"]
 
     # -- stage 4: near dedup, keep component canonicals --
-    if not done("dedup_near"):
-        d = _read_stage(spark, out_dir, "dedup_exact")
-        _commit_stage(
-            spark, out_dir, "dedup_near",
-            _near_dup_canonical(d), ["doc_id", "text"],
-            upstream_digest("dedup_exact"), src_snapshot_id,
-        )
-    if stop_after == "dedup_near":
-        return manifests(out_dir)
+    def dedup_near(d: DataFrame):
+        return _near_dup_canonical(d), ["doc_id", "text"]
 
     # -- stage 5: decontaminate vs the held-out eval set (raw docs 0..9) --
-    if not done("decontaminate"):
-        d = _read_stage(spark, out_dir, "dedup_near")
+    def decontaminate(d: DataFrame):
         bench = (
             _shingles_of(docs.where(F.col("doc_id") < _DECON_BENCH_DOCS))
             .select("sh")
@@ -474,32 +432,20 @@ def run_pipeline(
         clean = d.where(F.col("doc_id") >= _DECON_BENCH_DOCS).join(
             flagged, "doc_id", "left_anti"
         )
-        _commit_stage(
-            spark, out_dir, "decontaminate",
-            clean, ["doc_id", "text"], upstream_digest("dedup_near"), src_snapshot_id,
-        )
-    if stop_after == "decontaminate":
-        return manifests(out_dir)
+        return clean, ["doc_id", "text"]
 
     # -- stage 6: conversation-aware md5-bucket split --
-    if not done("split"):
-        d = _read_stage(spark, out_dir, "decontaminate")
+    def split(d: DataFrame):
         grp = (F.col("doc_id") / 10).cast("bigint")
         bucket = F.conv(
             F.substring(F.md5(grp.cast("string")), 1, 2), 16, 10
         ).cast("int")
-        split = F.when(bucket < _SPLIT_TRAIN_BUCKETS, "train").otherwise("test")
-        _commit_stage(
-            spark, out_dir, "split",
-            d.withColumn("split", split), ["doc_id", "text", "split"],
-            upstream_digest("decontaminate"), src_snapshot_id,
-        )
-    if stop_after == "split":
-        return manifests(out_dir)
+        side = F.when(bucket < _SPLIT_TRAIN_BUCKETS, "train").otherwise("test")
+        return d.withColumn("split", side), ["doc_id", "text", "split"]
 
     # -- stage 7: per-split packing (two-level distributed prefix sum) --
-    if not done("pack"):
-        d = _read_stage(spark, out_dir, "split").withColumn(
+    def pack(d: DataFrame):
+        d = d.withColumn(
             "n_tok", F.size(F.split("text", " ")).cast("bigint")
         ).withColumn("blk", F.floor(F.col("doc_id") / _PACK_BLOCK).cast("bigint"))
         blocks = d.groupBy("split", "blk").agg(F.sum("n_tok").alias("blk_tok"))
@@ -530,73 +476,56 @@ def run_pipeline(
                 .alias("bin_offset"),
             )
         )
-        _commit_stage(
-            spark, out_dir, "pack",
-            packed, ["doc_id", "text", "split", "bin_id", "bin_offset"],
-            upstream_digest("split"), src_snapshot_id,
-        )
-    if stop_after == "pack":
-        return manifests(out_dir)
+        return packed, ["doc_id", "text", "split", "bin_id", "bin_offset"]
 
     # -- stage 8: round-robin bins across shards; final training rows --
-    if not done("shard"):
-        d = _read_stage(spark, out_dir, "pack")
+    def shard(d: DataFrame):
         sharded = d.select(
             "doc_id", "text", "lang", "source", "split", "n_tok",
             "bin_id", "bin_offset",
             F.pmod(F.col("bin_id"), F.lit(N_SHARDS)).cast("bigint").alias("shard_id"),
             F.floor(F.col("bin_id") / N_SHARDS).cast("bigint").alias("shard_pos"),
             F.lit(src_snapshot_id).cast("bigint").alias("src_snapshot_id"),
-            F.lit(core.EXTRACTOR_VERSION).alias("extractor_version"),
+            F.lit(key["extractor_version"]).alias("extractor_version"),
             F.lit(PIPELINE_VERSION).alias("pipeline_version"),
         )
-        _commit_stage(
-            spark, out_dir, "shard",
-            sharded, ["doc_id", "text", "split", "shard_id", "shard_pos"],
-            upstream_digest("pack"), src_snapshot_id,
-        )
+        return sharded, ["doc_id", "text", "split", "shard_id", "shard_pos"]
+
+    builds = (extract, quality, dedup_exact, dedup_near, decontaminate, split, pack, shard)
+    upstream: Optional[int] = None
+    for i, (stage, build) in enumerate(zip(STAGES, builds)):
+        # reuse only a record built from this run's lineage AND from the
+        # upstream digest just read or committed — else recompute
+        path = _manifest_path(out_dir, stage)
+        rec = load_record(path, upstream_digest=upstream, **key)
+        if rec is None:
+            drop_record(path)
+            d = docs if i == 0 else _read_stage(spark, out_dir, STAGES[i - 1])
+            rec = _commit_stage(spark, out_dir, stage, *build(d), upstream, key)
+        upstream = rec["digest_sum"]
+        if stage == stop_after:
+            break
     return manifests(out_dir)
 
 
-def _invalidate_inconsistent(out_dir: str, src_snapshot_id: int) -> None:
-    """Resume must not trust manifest PRESENCE alone (ADVICE r5): a
-    committed stage is reusable only if its recorded chain still holds —
-    same snapshot and pipeline version as the requested run, and its
-    ``upstream_digest`` equal to the previous stage's ``digest_sum``.
-    The first stage that fails the check (or any stage committed after
-    a missing one — unverifiable orphans) has its manifest removed, so
-    ``run_pipeline`` recomputes from there instead of silently reusing
-    stages built from a different input."""
-    prev_digest: Optional[int] = None
-    broken: Optional[str] = None
-    for s in STAGES:
-        m = stage_manifest(out_dir, s)
-        if m is None:
-            broken = s  # later manifests (if any) are orphans
-            break
-        if (
-            m.get("src_snapshot_id") != src_snapshot_id
-            or m.get("pipeline_version") != PIPELINE_VERSION
-            or m.get("upstream_digest") != prev_digest
-        ):
-            broken = s
-            break
-        prev_digest = m["digest_sum"]
-    if broken is not None:
-        for s in STAGES[STAGES.index(broken):]:
-            p = _manifest_path(out_dir, s)
-            if os.path.exists(p):
-                os.remove(p)
-
-
 def manifests(out_dir: str) -> Dict[str, dict]:
-    return {
-        s: m for s in STAGES if (m := stage_manifest(out_dir, s)) is not None
-    }
+    """The committed chain: stage records in order, up to the first one
+    missing or not built on its predecessor (another upstream digest,
+    or another lineage than stage 1's)."""
+    chain: Dict[str, dict] = {}
+    expected: dict = {}
+    for s in STAGES:
+        rec = load_record(_manifest_path(out_dir, s), **expected)
+        if rec is None:
+            break
+        chain[s] = rec
+        expected = {k: rec.get(k) for k in (*LINEAGE_FIELDS, "pipeline_version")}
+        expected["upstream_digest"] = rec["digest_sum"]
+    return chain
 
 
 def is_complete(out_dir: str) -> bool:
-    return all(stage_manifest(out_dir, s) is not None for s in STAGES)
+    return len(manifests(out_dir)) == len(STAGES)
 
 
 def shard_manifest_df(spark: SparkSession, out_dir: str) -> DataFrame:

@@ -8,9 +8,17 @@ North-rule requirements implemented here:
   manifest entry; the rows themselves carry the lineage columns
   (``job.EXTRACTED_SCHEMA``).
 * **resumable from checkpoint** — the write unit is a *range of
-  conv_id-hash buckets* (one Spark job per range).  A manifest entry is
-  committed (atomic rename) only after its range's job finishes, so a
-  killed job resumes by re-running exactly the uncommitted ranges.
+  conv_id-hash buckets* (one Spark job per range), committed after its
+  job finishes as one lineage record ``_manifest/range-NNNNN.json``
+  (:func:`commit_record`, atomic rename).  A re-run reuses a range only
+  when :func:`load_record` finds its key — ``src_snapshot_id``, extractor
+  identity (strategy ``version`` + ``force_ocr``), ``num_buckets``,
+  ``bucket_lo``, ``bucket_hi`` — equal to this run's; otherwise it drops
+  the stale record, clears the range's buckets and recomputes.  Records
+  of another ``num_buckets`` make ``write`` raise before writing anything
+  (overwrite-by-bucket cannot clear buckets outside the new layout).
+  ``pipeline_e2e``'s stages commit and read the same record through the
+  same functions.
 * **idempotent re-run** — data is laid out ``data/part_bucket=K/`` and
   written with dynamic partition overwrite, so re-running a range
   *replaces* its buckets instead of appending.  Because ``part_bucket``
@@ -34,6 +42,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import tempfile
 from typing import Dict, List, Optional, Tuple
 
@@ -41,6 +50,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 from .extraction import core
 from .job import extract_detailed
+from .registry import Registry
 
 MANIFEST_DIR = "_manifest"
 DATA_DIR = "data"
@@ -58,26 +68,63 @@ def _ranges(num_buckets: int, num_ranges: int) -> List[Tuple[int, int]]:
     return [(lo, min(lo + step, num_buckets) - 1) for lo in range(0, num_buckets, step)]
 
 
-def load_manifest(out_dir: str) -> Dict[int, dict]:
-    mdir = os.path.join(out_dir, MANIFEST_DIR)
-    done: Dict[int, dict] = {}
-    if os.path.isdir(mdir):
-        for fn in os.listdir(mdir):
-            if fn.startswith("range-") and fn.endswith(".json"):
-                with open(os.path.join(mdir, fn)) as f:
-                    entry = json.load(f)
-                done[int(entry["range_id"])] = entry
-    return done
-
-
-def _commit(out_dir: str, entry: dict) -> None:
-    """Atomic manifest commit: tmp file + rename (the checkpoint barrier)."""
-    mdir = os.path.join(out_dir, MANIFEST_DIR)
-    os.makedirs(mdir, exist_ok=True)
-    fd, tmp = tempfile.mkstemp(dir=mdir, suffix=".tmp")
+def commit_record(path: str, entry: dict) -> None:
+    """Atomic commit of a lineage record: tmp file + ``os.replace`` (the
+    checkpoint barrier for sink ranges and pipeline stages alike)."""
+    parent = os.path.dirname(path)
+    os.makedirs(parent, exist_ok=True)
+    fd, tmp = tempfile.mkstemp(dir=parent, suffix=".tmp")
     with os.fdopen(fd, "w") as f:
         json.dump(entry, f)
-    os.replace(tmp, os.path.join(mdir, f"range-{entry['range_id']:05d}.json"))
+    os.replace(tmp, path)
+
+
+def load_record(path: str, **expected) -> Optional[dict]:
+    """The record committed at ``path`` when every ``expected`` lineage
+    field equals the recorded one; None when it is missing or was built
+    from another lineage (Discretized Streams' recompute-from-lineage)."""
+    try:
+        with open(path) as f:
+            entry = json.load(f)
+    except FileNotFoundError:
+        return None
+    return entry if all(entry.get(k) == v for k, v in expected.items()) else None
+
+
+def drop_record(path: str) -> None:
+    """Remove a stale record BEFORE its unit's data is overwritten, so a
+    crash mid-overwrite never leaves the old key on the new data."""
+    if os.path.exists(path):
+        os.remove(path)
+
+
+LINEAGE_FIELDS = ("src_snapshot_id", "extractor_version", "force_ocr")
+
+
+def lineage(src_snapshot_id: Optional[int] = None, strategy: Optional[str] = None,
+            force_ocr: bool = False) -> dict:
+    """A run's lineage key (:data:`LINEAGE_FIELDS`): the source snapshot
+    plus the extractor identity, i.e. the resolved strategy's ``version``
+    and ``force_ocr``."""
+    _, strategy_class = Registry.resolve_class(strategy)
+    values = (
+        -1 if src_snapshot_id is None else int(src_snapshot_id),
+        strategy_class(force_ocr=force_ocr).version,
+        bool(force_ocr),
+    )
+    return dict(zip(LINEAGE_FIELDS, values))
+
+
+def load_manifest(out_dir: str) -> Dict[int, dict]:
+    """Every range record committed under ``out_dir``, by range id."""
+    mdir = os.path.join(out_dir, MANIFEST_DIR)
+    names = sorted(os.listdir(mdir)) if os.path.isdir(mdir) else []
+    records = [
+        load_record(os.path.join(mdir, fn))
+        for fn in names
+        if fn.startswith("range-") and fn.endswith(".json")
+    ]
+    return {int(e["range_id"]): e for e in records}
 
 
 class CheckpointedParquetSink:
@@ -105,19 +152,43 @@ class CheckpointedParquetSink:
         force_ocr: bool = False,
         strategy: Optional[str] = None,
     ) -> List[dict]:
-        """Extract + write all not-yet-committed ranges; returns the manifest
-        entries committed by THIS call.  ``max_ranges`` bounds how many
-        ranges run (time-sliced incremental runs / fault-injection tests);
-        a later call with the same ``out_dir`` resumes where this left off.
+        """Extract + write every range without a record of this run's
+        lineage; returns the records committed by THIS call.
+        ``max_ranges`` bounds how many ranges run (time-sliced incremental
+        runs / fault-injection tests); a later call with the same
+        ``out_dir`` resumes where this left off.
         """
-        done = load_manifest(self.out_dir)
+        ranges = _ranges(self.num_buckets, self.num_ranges)
+        records = load_manifest(self.out_dir)
+        recorded = {e.get("num_buckets") for e in records.values()} - {self.num_buckets}
+        if recorded:
+            raise ValueError(
+                f"{self.out_dir} holds ranges committed with num_buckets="
+                f"{recorded.pop()}, but this write requests num_buckets="
+                f"{self.num_buckets}: overwrite-by-bucket cannot clear the old "
+                "buckets. Write to a fresh directory or keep the recorded layout."
+            )
+        # records of another range split cover buckets this layout
+        # overwrites under other range ids: never reusable, drop them
+        for range_id, e in records.items():
+            if range_id >= len(ranges) or (e["bucket_lo"], e["bucket_hi"]) != ranges[range_id]:
+                drop_record(self._record_path(range_id))
+        run = lineage(src_snapshot_id, strategy, force_ocr)
         committed: List[dict] = []
         bucket = _bucket_col(self.num_buckets)
-        for range_id, (lo, hi) in enumerate(_ranges(self.num_buckets, self.num_ranges)):
-            if range_id in done:
+        for range_id, (lo, hi) in enumerate(ranges):
+            path = self._record_path(range_id)
+            key = {"num_buckets": self.num_buckets, "bucket_lo": lo, "bucket_hi": hi}
+            if load_record(path, **key, **run) is not None:
                 continue
             if max_ranges is not None and len(committed) >= max_ranges:
                 break
+            drop_record(path)
+            # dynamic overwrite replaces only the buckets the new data fills
+            for k in range(lo, hi + 1):
+                stale = os.path.join(self.data_dir, f"part_bucket={k}")
+                if os.path.isdir(stale):
+                    shutil.rmtree(stale)
             part = transcripts.where(bucket.between(lo, hi))
             ext = extract_detailed(
                 part,
@@ -147,25 +218,25 @@ class CheckpointedParquetSink:
                 .parquet(self.data_dir)
             )
             metrics = {k: (0 if v is None else int(v)) for k, v in obs.get.items()}
-            entry = {
-                "range_id": range_id,
-                "bucket_lo": lo,
-                "bucket_hi": hi,
-                "src_snapshot_id": -1 if src_snapshot_id is None else int(src_snapshot_id),
-                "extractor_version": core.EXTRACTOR_VERSION,
-                "metrics": metrics,
-            }
-            _commit(self.out_dir, entry)
+            entry = {"range_id": range_id, **key, **run, "metrics": metrics}
+            commit_record(path, entry)
             committed.append(entry)
         return committed
+
+    def _record_path(self, range_id: int) -> str:
+        return os.path.join(self.out_dir, MANIFEST_DIR, f"range-{range_id:05d}.json")
 
     def read(self, spark: SparkSession) -> DataFrame:
         return spark.read.parquet(self.data_dir)
 
     def is_complete(self) -> bool:
-        return len(load_manifest(self.out_dir)) == len(
-            _ranges(self.num_buckets, self.num_ranges)
-        )
+        """Every range of this layout is committed, all under one lineage."""
+        recs = [
+            load_record(self._record_path(i), num_buckets=self.num_buckets, bucket_lo=lo, bucket_hi=hi)
+            for i, (lo, hi) in enumerate(_ranges(self.num_buckets, self.num_ranges))
+        ]
+        lineages = {tuple(r.get(k) for k in LINEAGE_FIELDS) for r in recs if r is not None}
+        return None not in recs and len(lineages) == 1
 
 
 def iceberg_runtime_available(spark: SparkSession) -> bool:

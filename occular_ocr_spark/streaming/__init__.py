@@ -22,27 +22,9 @@ from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.streaming import StreamingQuery
-from pyspark.sql.types import (
-    IntegerType,
-    StringType,
-    StructField,
-    StructType,
-    TimestampType,
-)
 
 from ..job import extract_detailed
-
-# BASELINE.json input_hint schema — file streams must declare it up front.
-TRANSCRIPT_SCHEMA = StructType(
-    [
-        StructField("conv_id", StringType(), True),
-        StructField("turn_idx", IntegerType(), True),
-        StructField("role", StringType(), True),
-        StructField("text", StringType(), True),
-        StructField("tool", StringType(), True),
-        StructField("ts", TimestampType(), True),
-    ]
-)
+from ..sources import TRANSCRIPT_SCHEMA
 
 
 def read_transcript_stream(

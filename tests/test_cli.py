@@ -85,6 +85,24 @@ def test_cli_checkpointed_resume(tmp_path):
     assert "committed 0 ranges" in r2.stdout
 
 
+def test_cli_checkpointed_lineage_rules(tmp_path):
+    """A new --snapshot-id recomputes every range; a changed --num-buckets
+    fails before writing, naming the recorded and the requested layout."""
+    inp = str(tmp_path / "turns.parquet")
+    out = str(tmp_path / "ckpt_sink")
+    write_transcripts_parquet(inp, n_convs=12, seed=64)
+    base = ["--input", inp, "--output", out, "--checkpointed",
+            "--num-ranges", "4", "--master", "local[2]"]
+    r1 = _run_cli(base + ["--num-buckets", "8", "--snapshot-id", "1"])
+    assert r1.returncode == 0, r1.stderr[-2000:]
+    r2 = _run_cli(base + ["--num-buckets", "8", "--snapshot-id", "2"])
+    assert r2.returncode == 0, r2.stderr[-2000:]
+    assert "committed 4 ranges" in r2.stdout and "complete=True" in r2.stdout
+    r3 = _run_cli(base + ["--num-buckets", "16", "--snapshot-id", "2"])
+    assert r3.returncode != 0
+    assert "num_buckets=8" in r3.stderr and "num_buckets=16" in r3.stderr
+
+
 def test_cli_pipeline_mode_with_resume(tmp_path):
     """--pipeline runs the composed curation chain over a tables dir;
     --stop-after commits a prefix, re-running completes the rest with

@@ -7,9 +7,14 @@ granularity.  The value-hash gate for the composition semantics is the
 
 from __future__ import annotations
 
+import json
 import os
 
+import pytest
+from py4j.protocol import Py4JError
+
 from occular_ocr_spark import pipeline_e2e as P
+from occular_ocr_spark.extraction import core
 from occular_ocr_spark.sink import CheckpointedParquetSink, load_manifest
 
 SF = "/root/testdata/sf0.001"
@@ -156,42 +161,100 @@ def test_shard_round_robin_balance(spark, tmp_path):
         assert max(counts) - min(counts) <= 1, (split, counts)
 
 
-def test_resume_rejects_inconsistent_manifest_chain(spark, tmp_path):
-    """ADVICE r5: resume must verify the manifest CHAIN, not just
-    presence — a re-run into the same out_dir with a different snapshot
-    recomputes instead of silently reusing stale stages, and a stage
-    whose upstream digest no longer matches invalidates its suffix."""
+def test_resume_rejects_inconsistent_manifest_chain(spark, tmp_path, monkeypatch):
+    """Resume verifies the record CHAIN, not just presence: a re-run with
+    a different snapshot recomputes every stage, a stage whose recorded
+    upstream digest no longer matches is recomputed, and so is a stage
+    whose record is missing mid-chain."""
     out_dir = str(tmp_path / "chain")
+    committed = []
+    real_commit = P._commit_stage
+
+    def spy(spark_, out_dir_, stage, *args):
+        committed.append(stage)
+        return real_commit(spark_, out_dir_, stage, *args)
+
+    monkeypatch.setattr(P, "_commit_stage", spy)
     P.run_pipeline(spark, SF, out_dir, src_snapshot_id=1)
     before = P.manifests(out_dir)
     assert all(m["src_snapshot_id"] == 1 for m in before.values())
 
-    # same snapshot: every stage reuses its committed manifest
-    P.run_pipeline(spark, SF, out_dir, src_snapshot_id=1)
-    assert P.manifests(out_dir) == before
+    # same snapshot: every stage reuses its committed record
+    committed.clear()
+    assert P.run_pipeline(spark, SF, out_dir, src_snapshot_id=1) == before
+    assert committed == []
 
     # different snapshot: the whole chain is recomputed under the new id
     P.run_pipeline(spark, SF, out_dir, src_snapshot_id=2)
     after = P.manifests(out_dir)
+    assert list(after) == list(P.STAGES)
     assert all(m["src_snapshot_id"] == 2 for m in after.values())
 
-    # tampered mid-chain digest: the downstream suffix is invalidated
-    # and recommitted against the (tampered) upstream value
-    import json as _json
-
+    # tampered mid-chain digest: the next stage no longer chains onto it,
+    # so it is recommitted against the (tampered) upstream value
     qpath = P._manifest_path(out_dir, "quality")
     with open(qpath) as f:
-        qman = _json.load(f)
+        qman = json.load(f)
     qman["digest_sum"] += 1
     with open(qpath, "w") as f:
-        _json.dump(qman, f)
-    P._invalidate_inconsistent(out_dir, src_snapshot_id=2)
-    left = P.manifests(out_dir)
-    assert set(left) == {"extract", "quality"}
+        json.dump(qman, f)
+    committed.clear()
+    ms = P.run_pipeline(spark, SF, out_dir, src_snapshot_id=2)
+    assert committed == ["dedup_exact"]
+    assert ms["dedup_exact"]["upstream_digest"] == qman["digest_sum"]
+    assert ms["dedup_exact"]["digest_sum"] == after["dedup_exact"]["digest_sum"]
 
-    # orphan manifests (a missing mid-chain stage) are also invalidated
-    os.remove(P._manifest_path(out_dir, "quality"))
-    P.run_pipeline(spark, SF, out_dir, src_snapshot_id=2)
-    full = P.manifests(out_dir)
-    assert set(full) == set(P.STAGES)
-    assert all(m["src_snapshot_id"] == 2 for m in full.values())
+    # a missing mid-chain record recomputes that stage, and the next one
+    # (whose record chains onto the tampered digest, not the real one)
+    os.remove(qpath)
+    committed.clear()
+    full = P.run_pipeline(spark, SF, out_dir, src_snapshot_id=2)
+    assert committed == ["quality", "dedup_exact"]
+    assert full == after
+
+
+def test_new_snapshot_restamps_extract_sink(spark, tmp_path, monkeypatch):
+    """A re-run under a new snapshot rewrites the stage-1 sink parquet
+    with the new id (the stage projection drops the column, so only the
+    sink shows it); an extractor-version bump rebuilds stage 1 too."""
+    out_dir = str(tmp_path / "resnap")
+    sink_dir = os.path.join(P._stage_dir(out_dir, "extract"), "sink")
+    P.run_pipeline(spark, SF, out_dir, stop_after="extract", src_snapshot_id=1)
+    P.run_pipeline(spark, SF, out_dir, stop_after="extract", src_snapshot_id=2)
+    snaps = spark.read.parquet(os.path.join(sink_dir, "data")).select("src_snapshot_id")
+    assert {r[0] for r in snaps.distinct().collect()} == {2}
+
+    monkeypatch.setattr(core, "EXTRACTOR_VERSION", core.EXTRACTOR_VERSION + "+bump")
+    ms = P.run_pipeline(spark, SF, out_dir, stop_after="extract", src_snapshot_id=2)
+    assert ms["extract"]["extractor_version"] == core.EXTRACTOR_VERSION
+    ranges = load_manifest(sink_dir)
+    assert len(ranges) == 4
+    assert all(e["extractor_version"] == core.EXTRACTOR_VERSION for e in ranges.values())
+
+
+def test_release_checkpoint_fails_loudly(spark):
+    """A plan with no checkpoint RDD behind it must raise, not pass."""
+    with pytest.raises(Py4JError):
+        P._release_checkpoint(spark.range(3))
+
+
+def test_cc_rounds_do_not_pile_up_checkpoint_blocks(spark, monkeypatch):
+    """Each CC round releases the previous round's label checkpoint, so
+    the number of RDDs holding storage blocks stays flat across rounds."""
+    jsc = spark.sparkContext._jsc.sc()
+    stored = []
+    real_release = P._release_checkpoint
+
+    def spy(df):
+        real_release(df)
+        stored.append(len(jsc.getRDDStorageInfo()))
+
+    monkeypatch.setattr(P, "_release_checkpoint", spy)
+    dup = "the quick brown fox jumps over the lazy dog near the river bank"
+    rows = [(i, dup) for i in range(5)] + [
+        (i, f"doc{i} alpha{i} beta{i} gamma{i} delta{i}") for i in range(5, 10)
+    ]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    kept = sorted(r["doc_id"] for r in P._near_dup_canonical(docs).collect())
+    assert kept == [0] + list(range(5, 10))
+    assert len(stored) >= 2 and len(set(stored)) == 1, stored

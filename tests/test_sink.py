@@ -3,11 +3,13 @@ kill after k ranges, re-run, assert the final table is identical to a
 clean single-shot write — including the uncommitted-range crash case
 (data written but manifest not committed)."""
 
+import glob
 import os
 import shutil
 
 import pytest
 
+from occular_ocr_spark.extraction import core
 from occular_ocr_spark.fixtures import transcripts_pandas
 from occular_ocr_spark.sink import CheckpointedParquetSink, IcebergSink, load_manifest
 
@@ -106,6 +108,83 @@ def test_manifest_lineage_and_metrics(spark, transcripts, tmp_path):
         b for e in entries for b in range(e["bucket_lo"], e["bucket_hi"] + 1)
     )
     assert covered == list(range(N_BUCKETS))
+
+
+def _turns(spark, seed, n_convs=20):
+    return spark.createDataFrame(transcripts_pandas(n_convs=n_convs, seed=seed))
+
+
+def _clean_rows(spark, df, path, **kw):
+    clean = CheckpointedParquetSink(path, N_BUCKETS, N_RANGES)
+    clean.write(df, **kw)
+    return _rows(spark, clean)
+
+
+def test_new_snapshot_recomputes_every_range(spark, tmp_path):
+    """Data A under snapshot 1, then data B under snapshot 2: the table
+    must equal a clean write of B, stamped with snapshot 2 everywhere.
+    B has fewer conversations, so some of A's buckets get no new rows."""
+    a, b = _turns(spark, 1), _turns(spark, 2, n_convs=5)
+    sink = CheckpointedParquetSink(str(tmp_path / "s"), N_BUCKETS, N_RANGES)
+    sink.write(a, src_snapshot_id=1)
+    rows_a = _rows(spark, sink)
+    assert len(sink.write(b, src_snapshot_id=2)) == N_RANGES
+    got = _rows(spark, sink)
+    assert got == _clean_rows(spark, b, str(tmp_path / "clean"), src_snapshot_id=2)
+    assert {r[4] for r in got} == {2}
+    assert [r[3] for r in got] != [r[3] for r in rows_a]  # B's texts differ from A's
+    assert sink.is_complete()
+
+
+@pytest.mark.parametrize("change", [{"force_ocr": True}, {"strategy": "plain_only"}])
+def test_extractor_change_recomputes_every_range(spark, transcripts, tmp_path, change):
+    sink = CheckpointedParquetSink(str(tmp_path / "s"), N_BUCKETS, N_RANGES)
+    sink.write(transcripts, src_snapshot_id=3)
+    again = sink.write(transcripts, src_snapshot_id=3, **change)
+    assert len(again) == N_RANGES
+    assert all(e["force_ocr"] == change.get("force_ocr", False) for e in again)
+    assert _rows(spark, sink) == _clean_rows(
+        spark, transcripts, str(tmp_path / "clean"), src_snapshot_id=3, **change
+    )
+    assert sink.write(transcripts, src_snapshot_id=3, **change) == []
+
+
+def test_extractor_version_bump_recomputes_every_range(spark, transcripts, tmp_path, monkeypatch):
+    sink = CheckpointedParquetSink(str(tmp_path), N_BUCKETS, N_RANGES)
+    sink.write(transcripts, src_snapshot_id=4)
+    monkeypatch.setattr(core, "EXTRACTOR_VERSION", core.EXTRACTOR_VERSION + "+bump")
+    again = sink.write(transcripts, src_snapshot_id=4)
+    assert len(again) == N_RANGES
+    assert all(e["extractor_version"] == core.EXTRACTOR_VERSION for e in again)
+
+
+def test_num_buckets_change_raises_before_writing(spark, transcripts, tmp_path):
+    out = str(tmp_path)
+    CheckpointedParquetSink(out, N_BUCKETS, N_RANGES).write(transcripts, src_snapshot_id=1)
+
+    def tree():
+        return sorted(
+            (p, os.path.getsize(p), os.stat(p).st_mtime_ns)
+            for p in glob.glob(os.path.join(out, "**"), recursive=True)
+        )
+
+    before = tree()
+    with pytest.raises(ValueError, match=f"num_buckets={N_BUCKETS}.*num_buckets=8"):
+        CheckpointedParquetSink(out, 8, 8).write(transcripts, src_snapshot_id=1)
+    assert tree() == before
+
+
+def test_range_split_change_never_reuses_overwritten_buckets(spark, tmp_path):
+    """4 ranges under snapshot 1, 2 ranges under snapshot 2, then 4 ranges
+    under snapshot 1 again: the first run's records for ranges 2-3 cover
+    buckets the second run overwrote, so they must not be reused."""
+    a, b = _turns(spark, 1), _turns(spark, 2)
+    out = str(tmp_path / "s")
+    CheckpointedParquetSink(out, N_BUCKETS, N_RANGES).write(a, src_snapshot_id=1)
+    CheckpointedParquetSink(out, N_BUCKETS, 2).write(b, src_snapshot_id=2)
+    sink = CheckpointedParquetSink(out, N_BUCKETS, N_RANGES)
+    assert len(sink.write(a, src_snapshot_id=1)) == N_RANGES
+    assert _rows(spark, sink) == _clean_rows(spark, a, str(tmp_path / "clean"), src_snapshot_id=1)
 
 
 def test_iceberg_sink_raises_without_runtime(spark):
